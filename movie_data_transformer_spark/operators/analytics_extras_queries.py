@@ -26,6 +26,7 @@ from movie_data_transformer_spark.operators.ordered_stats import (
     attach_order_stats,
     ntile_expr,
 )
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 TOP_MOVERS = 20
@@ -748,6 +749,9 @@ BOOT_B = 50
 # Poisson(1) CDF in micro units (1e6): P(X<=k) for k = 0..4; mass above
 # 5 (~0.06%) is folded into count 5 (declared truncation).
 BOOT_CDF = [367879, 735759, 919699, 981012, 996340]
+_BOOT_HASH = PORTABLE_HASH_SPARK_SQL.format(
+    x="concat(CAST(o_orderkey AS STRING), ':', CAST(b AS STRING))"
+)
 
 
 def _boot_count_expr(u: str) -> str:
@@ -796,9 +800,7 @@ def q_stats_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH base AS (SELECT * FROM _boot_base),
         fan AS (
             SELECT b, cents,
-                   CAST(conv(substr(md5(concat(CAST(o_orderkey AS STRING),
-                       ':', CAST(b AS STRING))), 1, 8), 16, 10) AS BIGINT)
-                       % 1000000 AS u
+                   {_BOOT_HASH} % 1000000 AS u
             FROM base LATERAL VIEW explode(sequence(1, {BOOT_B})) t AS b
         ),
         reps AS (

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import LOWER_TOKENS_SPARK_SQL, lower_tokens
+
 #: adjacent symbol pairs of the space-joined symbol string `s`
 #: (exploded), carrying the word frequency
 _PAIRS_EXPR = (
@@ -45,7 +47,7 @@ def words_as_symbols(docs: DataFrame, text_col: str = "text") -> DataFrame:
     the loop invariant)."""
     words = (
         docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word")
+            F.explode(lower_tokens(F.col(text_col))).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")
@@ -121,12 +123,13 @@ def apply_bpe_merges(
     names extra input columns to ride the projection (so downstream
     per-group reports need NO join back to the document table — the
     fertility-by-lang caller)."""
+    words = LOWER_TOKENS_SPARK_SQL.format(x="text")
     enc = docs.selectExpr(
         "doc_id",
         *carry,
-        "concat(' ', concat_ws(' </w>  ', transform(split(lower(trim(text)), '\\\\s+'), "
+        f"concat(' ', concat_ws(' </w>  ', transform({words}, "
         "w -> concat_ws(' ', split(w, '')))), ' </w> ') AS s",
-        "size(split(lower(trim(text)), '\\\\s+')) AS n_words",
+        f"size({words}) AS n_words",
     )
     col = F.col("s")
     for left, right in merges:

@@ -25,12 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.ordered_stats import attach_order_stats
+from movie_data_transformer_spark.operators.text import HASHED_LOGIT_SPARK_SQL, TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
-_SCORE_EXPR = (
-    r"aggregate(split(trim(text), '\\s+'), 0L, (acc, x) -> acc +"
-    " ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT) % 2001) - 1000))"
-)
+_SCORE_EXPR = HASHED_LOGIT_SPARK_SQL.format(t=TOKENS_SPARK_SQL.format(x="text"))
 
 
 def q_score_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.ordered_stats import attach_order_stats
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -44,14 +45,14 @@ def q_text_heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist_input=False,
     ).selectExpr("doc_id", "text", "rd", "(rd - 1) * 10 div n_docs + 1 AS decile")
     toks = docs.selectExpr(
-        "decile", r"explode(split(trim(text), '\\s+')) AS tok"
+        "decile", f"explode({TOKENS_SPARK_SQL.format(x='text')}) AS tok"
     )
     first_seen = toks.groupBy("tok").agg(F.min("decile").alias("first_decile"))
     vocab_new = first_seen.groupBy(F.col("first_decile").alias("decile")).agg(
         F.count("*").alias("new_types")
     )
     per_decile = docs.selectExpr(
-        "decile", r"size(split(trim(text), '\\s+')) AS n_toks"
+        "decile", f"size({TOKENS_SPARK_SQL.format(x='text')}) AS n_toks"
     ).groupBy("decile").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_toks").cast("long").alias("n_tokens"),

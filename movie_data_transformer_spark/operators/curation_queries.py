@@ -15,7 +15,9 @@ from movie_data_transformer_spark.operators.dedup import (
     normalize_text,
 )
 from movie_data_transformer_spark.operators.text import (
+    HASHED_LOGIT_SPARK_SQL,
     PORTABLE_HASH_SQL,
+    TOKENS_SPARK_SQL,
     portable_hash,
 )
 from movie_data_transformer_spark.operators.ordered_stats import attach_order_stats
@@ -353,7 +355,7 @@ def q_export_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "shard",
         "pos",
-        "size(split(trim(text), '\\\\s+')) AS n_tokens",
+        f"size({TOKENS_SPARK_SQL.format(x='text')}) AS n_tokens",
         "text",
     )
     out = tempfile.mkdtemp(prefix="mdt_export_")
@@ -758,7 +760,7 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.selectExpr(
             "doc_id",
             "lang",
-            r"split(trim(text), '\\s+') AS t",
+            f"{TOKENS_SPARK_SQL.format(x='text')} AS t",
         )
         .selectExpr(
             "doc_id",
@@ -766,9 +768,7 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(size(t) AS BIGINT) AS n_tokens",
             # single source for the weight fold; the label derives from
             # the projected column, never a second copy of the expression
-            "aggregate(t, 0L, (acc, x) -> acc +"
-            " ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT) % 2001) - 1000))"
-            " AS logit_sum",
+            f"{HASHED_LOGIT_SPARK_SQL.format(t='t')} AS logit_sum",
         )
         .selectExpr(
             "doc_id",

@@ -37,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.operators.text import portable_hash, tokens
+from movie_data_transformer_spark.operators.text import (
+    PORTABLE_HASH_SPARK_SQL,
+    portable_hash,
+    tokens,
+)
 
 # 32 affine minhash functions h_i(x) = (A_i * x + B_i) mod P (P = 2^31-1).
 MINHASH_P = 2147483647
@@ -47,10 +51,7 @@ N_BANDS, ROWS_PER_BAND = 16, 2
 #: SQL twin of transform(shingles, portable_hash) — a single F.expr is
 #: far cheaper to CONSTRUCT than the Python-lambda transform (py4j
 #: roundtrips per lambda), and this runs on every query build.
-HVALS_EXPR = (
-    "transform(shingles, s -> "
-    "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
-)
+HVALS_EXPR = f"transform(shingles, s -> {PORTABLE_HASH_SPARK_SQL.format(x='s')})"
 
 
 def normalize_text(col: Column) -> Column:
@@ -783,8 +784,8 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     fp_sql = f"""CAST(aggregate(
         transform(_toks, w -> named_struct(
-            'lo', CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT),
-            'hi', CAST(conv(substring(md5(concat('hi:', w)), 1, 8), 16, 10) AS BIGINT))),
+            'lo', {PORTABLE_HASH_SPARK_SQL.format(x="w")},
+            'hi', {PORTABLE_HASH_SPARK_SQL.format(x="concat('hi:', w)")})),
         array_repeat(0L, {SIMHASH_BITS}),
         (acc, h) -> zip_with(acc,
             concat(

@@ -15,6 +15,7 @@ from movie_data_transformer_spark.operators.dedup import (
     exact_substr_runs,
     ppjoin_prefix_pairs,
 )
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 MAX_SHINGLE_DF = 100
@@ -244,6 +245,7 @@ def cdc_chunk_table(spark: SparkSession, docs: DataFrame) -> DataFrame:
     toks.createOrReplaceTempView("_cdc_toks")
     leads = ", ".join(f"lead(tok, {j}) OVER w AS t{j}" for j in range(1, CDC_K))
     wincat = ", ".join(["tok"] + [f"t{j}" for j in range(1, CDC_K)])
+    win_hash = PORTABLE_HASH_SPARK_SQL.format(x=f"concat_ws(' ', {wincat})")
     return spark.sql(
         f"""
         WITH posed AS (
@@ -260,9 +262,7 @@ def cdc_chunk_table(spark: SparkSession, docs: DataFrame) -> DataFrame:
             SELECT doc_id, pos, tok,
                    CASE WHEN pos = 1 THEN 1
                         WHEN pos <= n - {CDC_K} + 1
-                             AND CAST(conv(substr(md5(
-                                 concat_ws(' ', {wincat})), 1, 8), 16, 10)
-                                 AS BIGINT) % {CDC_D} = 0 THEN 1
+                             AND {win_hash} % {CDC_D} = 0 THEN 1
                         ELSE 0 END AS b
             FROM led
         ),

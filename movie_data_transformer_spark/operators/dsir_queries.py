@@ -56,14 +56,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL, TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 B = 1024
 TOP_K = 40
 
-_BUCKET_SPARK = (
-    "CAST(conv(substr(md5(tok), 1, 8), 16, 10) AS BIGINT) % 1024"
-)
+_BUCKET_SPARK = PORTABLE_HASH_SPARK_SQL.format(x="tok") + " % 1024"
 _BUCKET_DUCK = "CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % 1024"
 
 
@@ -78,7 +77,7 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.selectExpr(
         "doc_id",
         "lang",
-        r"explode(split(trim(lower(text)), '\\s+')) AS tok",
+        f"explode({TOKENS_SPARK_SQL.format(x='lower(text)')}) AS tok",
     ).selectExpr(
         "doc_id", "lang", f"{_BUCKET_SPARK} AS bucket"
     )

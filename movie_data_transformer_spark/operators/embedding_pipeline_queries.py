@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 K = 5
@@ -143,8 +144,7 @@ def q_text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH counts AS (
             SELECT doc_id,
-                   CAST(conv(substr(md5(tok), 1, 8), 16, 10) AS BIGINT)
-                       % {FH_DIMS} AS dim,
+                   {PORTABLE_HASH_SPARK_SQL.format(x="tok")} % {FH_DIMS} AS dim,
                    CAST(count(*) AS BIGINT) AS c
             FROM _fh_toks GROUP BY 1, 2
         ),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -40,7 +41,7 @@ def _bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.selectExpr(
         "doc_id",
         "lang",
-        r"posexplode(split(trim(lower(text)), '\\s+')) AS (p, tok)",
+        f"posexplode({TOKENS_SPARK_SQL.format(x='lower(text)')}) AS (p, tok)",
     )
     w = Window.partitionBy("doc_id").orderBy("p")
     return (
@@ -96,7 +97,7 @@ def q_text_entropy_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     uni = (
         docs.selectExpr(
-            "lang", r"explode(split(trim(lower(text)), '\\s+')) AS tok"
+            "lang", f"explode({TOKENS_SPARK_SQL.format(x='lower(text)')}) AS tok"
         )
         .groupBy("lang", "tok")
         .agg(F.count("*").cast("bigint").alias("n_w"))

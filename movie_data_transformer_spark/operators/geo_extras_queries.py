@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 CELL = 100
@@ -33,7 +34,6 @@ SPACE = 1000
 # integer geometry formulas shared verbatim by both engines (md5-hash
 # coordinates; box width/height 20..96 so a box covers 1-2 cells/axis)
 _PH = "CAST('0x' || substr(md5({x}), 1, 8) AS BIGINT)"  # DuckDB spelling
-_PH_SPARK = "CAST(conv(substr(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def _geom_sql(ph: str, div: str) -> dict[str, str]:
@@ -53,7 +53,7 @@ def _geom_sql(ph: str, div: str) -> dict[str, str]:
 
 
 def q_join_points_in_boxes_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _geom_sql(_PH_SPARK, "DIV")
+    g = _geom_sql(PORTABLE_HASH_SPARK_SQL, "DIV")
     load_table(spark, sf_dir, "events").createOrReplaceTempView("_geo_events")
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("_geo_nation")
     return spark.sql(

@@ -38,14 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import HASHED_LOGIT_SPARK_SQL, TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 N_BINS = 20
 
-_LOGIT = (
-    r"aggregate(split(trim(text), '\\s+'), 0L, (acc, x) -> acc +"
-    r" ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT) % 2001) - 1000))"
-)
+_TOKS = TOKENS_SPARK_SQL.format(x="text")
+_LOGIT = HASHED_LOGIT_SPARK_SQL.format(t=_TOKS)
 
 
 def isotonic_fit_bins(bins: DataFrame) -> DataFrame:
@@ -107,7 +106,7 @@ def q_calibration_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         f"{_LOGIT} AS logit",
-        r"CAST(size(split(trim(text), '\\s+')) >= 30 AS INT) AS pos",
+        f"CAST(size({_TOKS}) >= 30 AS INT) AS pos",
     )
     binned = docs.selectExpr(
         "pos",

@@ -15,6 +15,7 @@ from movie_data_transformer_spark.operators.multimodal import (
     bmp_decode_pixels,
     synthesize_bmp_media,
 )
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 HISTEQ_SCHEMA = StructType(
@@ -822,6 +823,7 @@ def q_dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).createOrReplaceTempView("_win_toks")
     leads = ", ".join(f"lead(tok, {j}) OVER w AS t{j}" for j in range(1, WIN_K))
     gram = ", ".join(["tok"] + [f"t{j}" for j in range(1, WIN_K)])
+    gram_hash = PORTABLE_HASH_SPARK_SQL.format(x=f"concat_ws(' ', {gram})")
     # the fingerprint table is computed as its own persisted DataFrame:
     # SQL CTEs are inlined, so leaving fps inside the WITH re-ran the
     # posexplode + both per-doc window passes FOUR times (the df pass
@@ -840,8 +842,7 @@ def q_dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         grams AS (
             SELECT doc_id, pos,
-                   CAST(conv(substr(md5(concat_ws(' ', {gram})), 1, 8),
-                       16, 10) AS BIGINT) AS h
+                   {gram_hash} AS h
             FROM led
             WHERE pos <= n - {WIN_K} + 1
         ),

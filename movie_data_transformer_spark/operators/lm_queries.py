@@ -37,6 +37,7 @@ from movie_data_transformer_spark.operators.ordered_stats import (
     attach_order_stats,
     ntile_expr,
 )
+from movie_data_transformer_spark.operators.text import LOWER_TOKENS_SPARK_SQL, lower_tokens
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -47,7 +48,7 @@ def _doc_tokens(docs: DataFrame) -> DataFrame:
     return (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
+            F.explode(lower_tokens(F.col("text"))).alias("token"),
         )
         .filter(F.col("token") != "")
     )
@@ -319,9 +320,7 @@ def q_docs_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "pos", "token"
-        ),
+        F.posexplode(lower_tokens(F.col("text"))).alias("pos", "token"),
     ).filter(F.col("token") != "")
     vocab = _vocab(docs).select("token", "token_id")
     enc = toks.join(F.broadcast(vocab), "token", "left").select(
@@ -649,7 +648,7 @@ def q_bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ug = toks.groupBy("token").agg(F.count("*").cast("bigint").alias("c"))
     pairs = (
         load_table(spark, sf_dir, "documents")
-        .selectExpr(r"split(lower(trim(text)), '\\s+') AS t")
+        .selectExpr(f"{LOWER_TOKENS_SPARK_SQL.format(x='text')} AS t")
         .selectExpr(
             "explode(transform(slice(t, 1, size(t) - 1),"
             " (x, i) -> struct(x AS w1, element_at(t, i + 2) AS w2))) AS p"

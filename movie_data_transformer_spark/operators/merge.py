@@ -41,7 +41,6 @@ FLAT_COLS = ["movieId", "title", "yearOfRelease", "customerId", "rating", "date"
 def merge_flat(
     state: DataFrame,
     batch: DataFrame,
-    dedup_inputs: bool = True,
     with_decision: bool = False,
 ) -> DataFrame:
     """Merge new flat rating rows into flat state rows.
@@ -54,10 +53,8 @@ def merge_flat(
     (operators/metrics.py) — the taxonomy of the reference's
     newCount/updateCount/successCount (DataTransformationService.java:170-172).
     """
-    if dedup_inputs:
-        state, batch = dedup_latest(state), dedup_latest(batch)
-    s = state.select([F.col(c).alias(f"s_{c}") for c in FLAT_COLS])
-    b = batch.select([F.col(c).alias(f"b_{c}") for c in FLAT_COLS])
+    s = dedup_latest(state).select([F.col(c).alias(f"s_{c}") for c in FLAT_COLS])
+    b = dedup_latest(batch).select([F.col(c).alias(f"b_{c}") for c in FLAT_COLS])
     joined = s.join(
         b,
         (s["s_customerId"] == b["b_customerId"]) & (s["s_movieId"] == b["b_movieId"]),

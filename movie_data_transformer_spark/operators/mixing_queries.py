@@ -29,11 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 _BUDGET = 100_000
 
-_TOKENS_EXPR = r"CAST(size(split(trim(text), '\\s+')) AS BIGINT)"
+_TOKENS_EXPR = f"CAST(size({TOKENS_SPARK_SQL.format(x='text')}) AS BIGINT)"
 _TOKENS_SQL = r"CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)"
 _QUALITY_EXPR = "CASE WHEN n_chars BETWEEN 200 AND 8000 THEN 1 ELSE 0 END"
 

@@ -28,7 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.operators.text import quality_scores, text_stats
+from movie_data_transformer_spark.operators.text import (
+    HASHED_LOGIT_SPARK_SQL,
+    TOKENS_SPARK_SQL,
+    quality_scores,
+    text_stats,
+)
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -38,9 +43,8 @@ def q_classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     qual = quality_scores(docs).select("doc_id", "stopword_ratio")
     clf = docs.selectExpr(
         "doc_id",
-        r"aggregate(split(trim(text), '\\s+'), 0L, (acc, x) -> acc +"
-        " ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT) % 2001) - 1000))"
-        " AS logit_sum",
+        HASHED_LOGIT_SPARK_SQL.format(t=TOKENS_SPARK_SQL.format(x="text"))
+        + " AS logit_sum",
     )
     flags = (
         stats.join(qual, "doc_id")

@@ -49,6 +49,12 @@ from movie_data_transformer_spark.operators.ordered_stats import (
     attach_order_stats,
     ntile_expr,
 )
+from movie_data_transformer_spark.operators.text import (
+    HASHED_LOGIT_SPARK_SQL,
+    LOWER_TOKENS_SPARK_SQL,
+    PORTABLE_HASH_SPARK_SQL,
+    TOKENS_SPARK_SQL,
+)
 from movie_data_transformer_spark.sources.tables import load_table
 
 DIM = 32
@@ -59,19 +65,33 @@ LABEL_TOKEN = "slow"
 #: corpus vocabulary at DIM=32 — verified, no collision with other tokens)
 LABEL_BUCKET = int(hashlib.md5(LABEL_TOKEN.encode()).hexdigest()[:8], 16) % DIM
 
+_TOKS = TOKENS_SPARK_SQL.format(x="text")
+_LOWER_TOKS = LOWER_TOKENS_SPARK_SQL.format(x="text")
+#: the classifier evaluators' scored projection: the hashed-linear logit
+#: s and the rule-based quality-gate label y (corpus_quality_filter's
+#: thresholds, exact DECIMAL micro-unit compares)
+_SCORED = f"""
+    {HASHED_LOGIT_SPARK_SQL.format(t=_TOKS)} AS s,
+    CASE WHEN size({_TOKS}) >= 30
+          AND CAST(size(array_distinct({_TOKS})) AS DECIMAL(20,0)) * 1000000
+              DIV size({_TOKS}) >= 200000
+          AND CAST(size(filter({_LOWER_TOKS},
+                    w -> w IN ('the','a','an','and','or','of','to','in','is')))
+                   AS DECIMAL(20,0)) * 1000000
+              DIV size({_LOWER_TOKS}) >= 10000
+         THEN 1 ELSE 0 END AS y"""
+
 
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed bag-of-words PRESENCE vector per document + label, built
     map-side in one generated selectExpr."""
     docs = load_table(spark, sf_dir, "documents")
+    h = PORTABLE_HASH_SPARK_SQL.format(x="x")
     cols = ["doc_id", f"CAST(array_contains(t, '{LABEL_TOKEN}') AS INT) AS y"] + [
-        "CAST(size(filter(t, x -> pmod(CAST(conv(substr(md5(x), 1, 8), 16, 10)"
-        f" AS BIGINT), {DIM}) = {i})) > 0 AS DOUBLE) AS x{i}"
+        f"CAST(size(filter(t, x -> pmod({h}, {DIM}) = {i})) > 0 AS DOUBLE) AS x{i}"
         for i in range(DIM)
     ]
-    return docs.selectExpr("doc_id", r"split(trim(text), '\\s+') AS t").selectExpr(
-        *cols
-    )
+    return docs.selectExpr("doc_id", f"{_TOKS} AS t").selectExpr(*cols)
 
 
 def train_lr(
@@ -205,23 +225,8 @@ def q_classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("_auc_docs")
     grp = spark.sql(
-        r"""
-        WITH scored AS (
-            SELECT aggregate(split(trim(text), '\\s+'), 0L, (acc, x) -> acc +
-                       ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT)
-                         % 2001) - 1000)) AS s,
-                   CASE WHEN size(split(trim(text), '\\s+')) >= 30
-                         AND CAST(size(array_distinct(split(trim(text), '\\s+')))
-                                  AS DECIMAL(20,0)) * 1000000
-                             DIV size(split(trim(text), '\\s+')) >= 200000
-                         AND CAST(size(filter(split(lower(trim(text)), '\\s+'),
-                                   w -> w IN ('the','a','an','and','or','of',
-                                              'to','in','is')))
-                                  AS DECIMAL(20,0)) * 1000000
-                             DIV size(split(lower(trim(text)), '\\s+')) >= 10000
-                        THEN 1 ELSE 0 END AS y
-            FROM _auc_docs
-        ),
+        f"""
+        WITH scored AS (SELECT {_SCORED} FROM _auc_docs),
         grp AS (
             SELECT s, CAST(count(*) AS BIGINT) AS c,
                    CAST(sum(y) AS BIGINT) AS p
@@ -305,28 +310,7 @@ def q_classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame
     until the two floor micro ratios."""
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("_cal_docs")
-    scored = spark.sql(
-        r"""
-        WITH scored AS (
-            SELECT doc_id,
-                   aggregate(split(trim(text), '\\s+'), 0L, (acc, x) -> acc +
-                       ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT)
-                         % 2001) - 1000)) AS s,
-                   CASE WHEN size(split(trim(text), '\\s+')) >= 30
-                         AND CAST(size(array_distinct(split(trim(text), '\\s+')))
-                                  AS DECIMAL(20,0)) * 1000000
-                             DIV size(split(trim(text), '\\s+')) >= 200000
-                         AND CAST(size(filter(split(lower(trim(text)), '\\s+'),
-                                   w -> w IN ('the','a','an','and','or','of',
-                                              'to','in','is')))
-                                  AS DECIMAL(20,0)) * 1000000
-                             DIV size(split(lower(trim(text)), '\\s+')) >= 10000
-                        THEN 1 ELSE 0 END AS y
-            FROM _cal_docs
-        )
-        SELECT doc_id, s, y FROM scored
-        """
-    )
+    scored = spark.sql(f"SELECT doc_id, {_SCORED} FROM _cal_docs")
     # decile assignment via the two-pass global rank + integer ntile
     # (ordered_stats) — no single-partition window at doc grain; the
     # scored table persists as the fork point for the rank passes

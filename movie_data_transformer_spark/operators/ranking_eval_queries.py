@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 K = 10
@@ -69,8 +70,8 @@ DISC_MICRO = (
 
 #: planted graded relevance 0..3 per (source, doc_id)
 _REL_SPARK = (
-    "CAST(conv(substr(md5(concat(source, '#', CAST(doc_id AS STRING))), 1, 8),"
-    " 16, 10) AS BIGINT) % 4"
+    PORTABLE_HASH_SPARK_SQL.format(x="concat(source, '#', CAST(doc_id AS STRING))")
+    + " % 4"
 )
 _REL_DUCK = (
     "CAST('0x' || substr(md5(source || '#' || CAST(doc_id AS VARCHAR)), 1, 8)"

@@ -42,18 +42,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import HASHED_LOGIT_SPARK_SQL, TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 M_RATERS = 3
 
 #: one fused projection: every gate from one tokenization pass
+_TOKS = TOKENS_SPARK_SQL.format(x="text")
 _FLAGS_SELECT = [
-    r"size(split(trim(text), '\\s+')) >= 30 AS r1",
-    r"CAST(size(array_distinct(split(trim(text), '\\s+'))) * 1000000L"
-    r" div size(split(trim(text), '\\s+')) AS DOUBLE) / 1000000 >= 0.2 AS r2",
-    r"aggregate(split(trim(text), '\\s+'), 0L, (acc, x) -> acc +"
-    r" ((CAST(conv(substr(md5(x), 1, 8), 16, 10) AS BIGINT) % 2001) - 1000))"
-    r" >= 0 AS r3",
+    f"size({_TOKS}) >= 30 AS r1",
+    f"CAST(size(array_distinct({_TOKS})) * 1000000L"
+    f" div size({_TOKS}) AS DOUBLE) / 1000000 >= 0.2 AS r2",
+    f"{HASHED_LOGIT_SPARK_SQL.format(t=_TOKS)} >= 0 AS r3",
 ]
 
 #: DuckDB twin of _FLAGS_SELECT

@@ -37,14 +37,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 #: fused count expressions — one tokenization pass
 _COUNTS_SPARK = [
-    r"CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS w",
+    f"CAST(size({TOKENS_SPARK_SQL.format(x='text')}) AS BIGINT) AS w",
     r"CAST(greatest(1, size(filter(split(text, '[.!?]+'),"
     r" s -> length(trim(s)) > 0))) AS BIGINT) AS s",
-    r"CAST(aggregate(split(trim(lower(text)), '\\s+'), 0L, (acc, x) ->"
+    f"CAST(aggregate({TOKENS_SPARK_SQL.format(x='lower(text)')}, 0L, (acc, x) ->"
     r" acc + greatest(1L, CAST(size(regexp_extract_all(x, '[aeiouy]+', 0))"
     r" AS BIGINT))) AS BIGINT) AS y",
 ]

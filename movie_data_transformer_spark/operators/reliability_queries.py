@@ -11,7 +11,7 @@ Both were pytest-only through round 2 (VERDICT r2 "What's missing" #2);
 these entries give them binding driver oracle rows.
 
 The op-14 fixture assigns each nested movie doc to one of 4 JSONL files by
-a PORTABLE hash of movieId (conv(substr(md5(x),1,8),16,10) — the same
+a PORTABLE hash of movieId (operators/text.py portable_hash — the same
 recipe both engines agree on, NOTES.md), and plants one corrupt line in
 file 3. The oracle is then expressible in ANSI SQL: every rating whose
 movie does NOT hash to the skipped file.
@@ -32,6 +32,7 @@ from movie_data_transformer_spark.operators.metrics import (
 )
 from movie_data_transformer_spark.operators.movie_pipeline import explode_watched
 from movie_data_transformer_spark.operators.movie_queries import _exploded
+from movie_data_transformer_spark.operators.text import portable_hash
 from movie_data_transformer_spark.sources.jsonl import read_movies_jsonl_skip_bad_files
 
 N_FILES = 4
@@ -69,10 +70,7 @@ def _skip_dir(spark: SparkSession, sf_dir: str) -> str:
         (
             nested.withColumn(
                 "bucket",
-                (
-                    F.conv(F.substring(F.md5("movieId"), 1, 8), 16, 10).cast("bigint")
-                    % N_FILES
-                ).cast("int"),
+                (portable_hash(F.col("movieId")) % N_FILES).cast("int"),
             )
             .repartition(N_FILES, F.col("bucket"))
             .select("bucket", F.to_json(F.struct(*nested.columns)).alias("value"))

@@ -33,24 +33,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 #: md5-derived bucket in [0, 1e6) — Spark side. The first 8 hex chars fit
 #: in 32 bits, so the BIGINT conv is exact; both operands non-negative so
 #: % agrees across engines.
-_DOC_BUCKET = (
-    "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-    " % 1000000"
-)
+_DOC_BUCKET = PORTABLE_HASH_SPARK_SQL.format(x="CAST(doc_id AS STRING)") + " % 1000000"
 #: DuckDB twin.
 _DOC_BUCKET_SQL = (
     "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000000"
 )
 
-_CUST_BUCKET = (
-    "CAST(conv(substr(md5(CAST(o_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-    " % 10"
-)
+_CUST_BUCKET = PORTABLE_HASH_SPARK_SQL.format(x="CAST(o_custkey AS STRING)") + " % 10"
 _CUST_BUCKET_SQL = (
     "CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 8) AS BIGINT) % 10"
 )

@@ -28,6 +28,7 @@ from movie_data_transformer_spark.operators.search_ranking_queries import (
     QUERY_TERMS,
     q_search_bm25_topk,
 )
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL, TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 RRF_K = 60
@@ -74,11 +75,11 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_search_bm25_topk(spark, sf_dir).createOrReplaceTempView("_rrf_bm25")
     docs = load_table(spark, sf_dir, "documents")
     docs.selectExpr(
-        "doc_id", r"explode(split(trim(text), '\\s+')) AS tok"
+        "doc_id", f"explode({TOKENS_SPARK_SQL.format(x='text')}) AS tok"
     ).createOrReplaceTempView("_rrf_toks")
     vec_ctes = _VEC_RANK_TMPL.format(
-        hash_expr="conv(substr(md5(term), 1, 8), 16, 10)",
-        hash_tok_expr="conv(substr(md5(tok), 1, 8), 16, 10)",
+        hash_expr=PORTABLE_HASH_SPARK_SQL.format(x="term"),
+        hash_tok_expr=PORTABLE_HASH_SPARK_SQL.format(x="tok"),
         dims=FH_DIMS,
         qvals=_QUERY_VALUES,
     )

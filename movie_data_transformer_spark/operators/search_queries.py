@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import lower_tokens
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -43,7 +44,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
+        F.explode(lower_tokens(F.col("text"))).alias("token"),
     ).filter(F.col("token") != "")
     tfd = toks.groupBy("token", "doc_id").agg(F.count("*").alias("tf"))
     return tfd.groupBy("token").agg(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 #: fixed literal query set (query_id, term) — shared with the oracle.
@@ -68,7 +69,7 @@ def q_search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.selectExpr("doc_id", r"split(trim(text), '\\s+') AS t")
+    toks = docs.selectExpr("doc_id", f"{TOKENS_SPARK_SQL.format(x='text')} AS t")
     vocab = sorted({t for _, t in QUERY_TERMS})
     # one scan: dl rides along the exploded tokens; prune to the query
     # vocabulary BEFORE the shuffle
@@ -184,7 +185,7 @@ def q_search_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = sorted({t for _, t, _ in PHRASES})
     postings = (
         docs.selectExpr(
-            "doc_id", r"posexplode(split(trim(text), '\\s+')) AS (pos, term)"
+            "doc_id", f"posexplode({TOKENS_SPARK_SQL.format(x='text')}) AS (pos, term)"
         )
         .filter(F.col("term").isin(*vocab))
     )

@@ -30,14 +30,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 K = 8
 _H = 4294967296  # 2^32 hash space
 
-_HASH = (
-    "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-)
+_HASH = PORTABLE_HASH_SPARK_SQL.format(x="CAST(user_id AS STRING)")
 _HASH_SQL = "CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT)"
 
 

@@ -33,14 +33,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL, TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 NOISE_PERMILLE = 150
 
 _MASK_SPARK = (
-    "CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), '#',"
-    " CAST(p AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000"
-    f" < {NOISE_PERMILLE}"
+    PORTABLE_HASH_SPARK_SQL.format(x="concat(CAST(doc_id AS STRING), '#', CAST(p AS STRING))")
+    + f" % 1000 < {NOISE_PERMILLE}"
 )
 _MASK_DUCK = (
     "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#' ||"
@@ -53,7 +53,7 @@ def q_spans_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.selectExpr(
         "doc_id",
-        r"CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS n_tokens",
+        f"CAST(size({TOKENS_SPARK_SQL.format(x='text')}) AS BIGINT) AS n_tokens",
     )
     pos = toks.selectExpr(
         "doc_id",

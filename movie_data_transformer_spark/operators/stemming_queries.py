@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -52,7 +53,7 @@ def q_text_sstem_vocab_reduction(
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.selectExpr(
-        "lang", r"explode(split(trim(lower(text)), '\\s+')) AS tok"
+        "lang", f"explode({TOKENS_SPARK_SQL.format(x='lower(text)')}) AS tok"
     ).selectExpr("lang", "tok", f"{_sstem('tok')} AS stem")
     return (
         toks.groupBy("lang")

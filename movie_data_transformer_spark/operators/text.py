@@ -7,9 +7,20 @@ no Python in the hot path) and therefore scale linearly with input: no
 shuffle at all until an aggregation is requested.
 
 Portable-hash convention used across dedup/simhash/minhash: a token or
-shingle hashes to the integer value of the first 8 hex digits of its md5
-(`conv(substr(md5(s),1,8),16,10)`), which every engine reproduces exactly
-— unlike engine-native hash() functions.
+shingle hashes to the integer value of the first 8 hex digits of its md5,
+which every engine reproduces exactly — unlike engine-native hash()
+functions.
+
+This module is the one place the Spark side spells the text-feature
+vocabulary; operators format these instead of writing their own copy:
+
+  - portable_hash / PORTABLE_HASH_SPARK_SQL — the md5 feature hash
+    (DuckDB twin: PORTABLE_HASH_SQL)
+  - tokens / TOKENS_SPARK_SQL — whitespace tokenizer split(trim(x), \\s+)
+  - lower_tokens / LOWER_TOKENS_SPARK_SQL — the same, lower-cased after
+    the trim
+  - HASHED_LOGIT_SPARK_SQL — the hashed-linear classifier logit: the sum
+    over a token array of (portable hash % 2001) - 1000
 """
 
 from __future__ import annotations
@@ -17,6 +28,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from movie_data_transformer_spark.functions import micro_ratio
 
 #: tiny function-word profiles for the language-ID heuristic
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -34,7 +47,22 @@ PORTABLE_HASH_SQL = "CAST('0x' || substr(md5({x}), 1, 8) AS BIGINT)"
 #: the same hash as a Spark SQL expression string, for operators built
 #: with selectExpr/generated SQL (the py4j-cheap construction path) —
 #: keep in lockstep with portable_hash/PORTABLE_HASH_SQL
-PORTABLE_HASH_SPARK_SQL = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+PORTABLE_HASH_SPARK_SQL = "CAST(conv(substr(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+
+#: tokens() as a Spark SQL expression string over the string expression {x}
+TOKENS_SPARK_SQL = r"split(trim({x}), '\\s+')"
+
+#: lower_tokens() as a Spark SQL expression string
+LOWER_TOKENS_SPARK_SQL = r"split(lower(trim({x})), '\\s+')"
+
+#: hashed-linear classifier logit over the token array {t}: each token
+#: weighs (portable hash % 2001) - 1000, an integer in [-1000, 1000], so
+#: the sum is exact on every engine
+HASHED_LOGIT_SPARK_SQL = (
+    "aggregate({t}, 0L, (acc, x) -> acc + (("
+    + PORTABLE_HASH_SPARK_SQL.format(x="x")
+    + " % 2001) - 1000))"
+)
 
 
 def portable_hash(col: Column) -> Column:
@@ -46,6 +74,11 @@ def portable_hash(col: Column) -> Column:
 def tokens(col: Column) -> Column:
     """Whitespace tokenization (order-preserving array)."""
     return F.split(F.trim(col), r"\s+")
+
+
+def lower_tokens(col: Column) -> Column:
+    """tokens() of the lower-cased text (lower applied after the trim)."""
+    return F.split(F.lower(F.trim(col)), r"\s+")
 
 
 def token_count_vectorized():
@@ -66,16 +99,18 @@ def token_count_vectorized():
     return _count
 
 
+def _token_len_sum(t: Column) -> Column:
+    """Total characters over a token array, as a long."""
+    return F.aggregate(
+        F.transform(t, lambda w: F.length(w).cast("long")), F.lit(0).cast("long"), lambda a, x: a + x
+    )
+
+
 def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting + quality-score features per document. Ratio
     columns are exact integer micro-units (micro_ratio), never
     round(int/int, 6) — the rounding-midpoint class (NOTES.md)."""
-    from movie_data_transformer_spark.functions import micro_ratio
-
     t = tokens(F.col(text_col))
-    token_len_sum = F.aggregate(
-        F.transform(t, lambda w: F.length(w).cast("long")), F.lit(0).cast("long"), lambda a, x: a + x
-    )
     base = docs.select(
         "doc_id",
         F.size(t).cast("long").alias("n_tokens"),
@@ -85,7 +120,7 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.size(F.regexp_extract_all(F.col(text_col), F.lit("[a-zA-Z]+|[0-9]+"), F.lit(0)))
         .cast("long")
         .alias("n_tokens_re"),
-        token_len_sum.alias("_len_sum"),
+        _token_len_sum(t).alias("_len_sum"),
     )
     return base.select(
         "doc_id",
@@ -125,8 +160,6 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     pipeline cuts on. All ratios in exact integer micro-units
     (micro_ratio) so threshold membership downstream (corpus_quality_
     filter, quality_gate_funnel) can never flip on a rounding midpoint."""
-    from movie_data_transformer_spark.functions import micro_ratio
-
     t = tokens(F.lower(F.col(text_col)))
     n_chars = F.length(text_col)
     stop = F.size(
@@ -143,11 +176,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.size(F.regexp_extract_all(text_col, F.lit("[a-zA-Z]"), F.lit(0)))
         .cast("long")
         .alias("_n_alpha"),
-        F.aggregate(
-            F.transform(t, lambda w: F.length(w).cast("long")),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ).alias("_len_sum"),
+        _token_len_sum(t).alias("_len_sum"),
     )
     return base.select(
         "doc_id",
@@ -303,8 +332,6 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .agg(F.count("*").alias("n"))
         )
 
-    from movie_data_transformer_spark.functions import micro_ratio
-
     chars = F.col("n") * F.length("g")
     # ratios in exact integer micro-units (micro_ratio), never
     # round(int/int, 6) — the rounding-midpoint class (NOTES.md)
@@ -427,10 +454,6 @@ def pack_sequences(
     independent packers, each streaming its bucket sorted; no global
     sort, no driver involvement. Determinism (same assignment under any
     input partitioning) is asserted in tests."""
-    import pandas as pd
-
-    from movie_data_transformer_spark.operators.text import portable_hash
-
     schema = "doc_id long, chunk_idx int, n_tokens int, bucket int, bin_id int"
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -45,7 +46,7 @@ def q_text_collapse_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.selectExpr(
         "doc_id",
-        r"split(trim(text), '\\s+') AS t",
+        f"{TOKENS_SPARK_SQL.format(x='text')} AS t",
     ).selectExpr(
         "doc_id",
         "CAST(size(t) AS BIGINT) AS n_tokens_before",
@@ -103,7 +104,7 @@ def q_text_line_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame
     # round; no-op on an already-wide cluster scan)
     docs = widen_for_compute(load_table(spark, sf_dir, "documents"))
     chunks = (
-        docs.selectExpr("doc_id", r"split(trim(text), '\\s+') AS t")
+        docs.selectExpr("doc_id", f"{TOKENS_SPARK_SQL.format(x='text')} AS t")
         .selectExpr(
             "doc_id",
             # named_struct keeps (index, line) together so the final
@@ -166,7 +167,7 @@ def q_text_c4_line_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.selectExpr(
-        "doc_id", r"posexplode(split(trim(text), '\\s+')) AS (pos, tok)"
+        "doc_id", f"posexplode({TOKENS_SPARK_SQL.format(x='text')}) AS (pos, tok)"
     )
     is_term = F.when(F.col("tok") == "the", 1).otherwise(0)
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from movie_data_transformer_spark.operators.text import TOKENS_SPARK_SQL
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -39,7 +40,7 @@ def _type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.selectExpr(
             "lang",
-            r"explode(split(trim(lower(text)), '\\s+')) AS tok",
+            f"explode({TOKENS_SPARK_SQL.format(x='lower(text)')}) AS tok",
         )
         .groupBy("lang", "tok")
         .agg(F.count("*").cast("bigint").alias("n"))

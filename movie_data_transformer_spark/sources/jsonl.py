@@ -16,7 +16,7 @@ Covers reference ops 1-3 and 15 (SURVEY.md §2.1):
           (DataTransformationService.java:141-143): the reference fails the
           whole file on one bad line and retries it; we do strictly better —
           PERMISSIVE mode isolates the bad *line* into `_corrupt_record`
-          and keeps the rest of the file. DROPMALFORMED/FAILFAST selectable.
+          and keeps the rest of the file.
 
 At 100 TB: listing is metadata-parallel, decode is one task per file split
 (`spark.sql.files.maxPartitionBytes` sizes splits), and the whole
@@ -27,7 +27,8 @@ single-JVM ceiling.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from movie_data_transformer_spark.schemas import MOVIE_INPUT
@@ -35,39 +36,33 @@ from movie_data_transformer_spark.schemas import MOVIE_INPUT
 CORRUPT_COL = "_corrupt_record"
 
 
-def read_movies_jsonl(
-    spark: SparkSession,
-    path: str,
-    mode: str = "PERMISSIVE",
-    glob: str = "*.json",
-    keep_corrupt_column: bool = False,
-) -> DataFrame:
+def _parse_line(value: str) -> Column:
+    """Permissive from_json of one raw line: an undecodable line lands in
+    the struct's CORRUPT_COL field instead of failing the scan."""
+    schema = StructType(list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())])
+    return F.from_json(
+        value, schema, {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
+    )
+
+
+def read_movies_jsonl(spark: SparkSession, path: str, glob: str = "*.json") -> DataFrame:
     """Read newline-delimited MovieInput JSON under `path`.
 
     `path` plays the role of the reference's bucket+prefix
     (application.properties:8, prefix `movies/`); `glob` the `.json`
     suffix predicate (DataTransformationService.java:88).
+
+    "Parse what you can, drop bad lines" — the reference's net effect (it
+    fails+retries+skips the whole file, DataTransformationService.java:
+    124-126; we drop only the bad LINE). DROPMALFORMED does this
+    scan-side; it also avoids Spark's restriction on queries that
+    reference only the corrupt-record column. corrupt_records() exposes
+    the dropped lines.
     """
-    mode = mode.upper()
-    schema = MOVIE_INPUT
-    if mode == "PERMISSIVE":
-        if not keep_corrupt_column:
-            # "parse what you can, drop bad lines" — the reference's net
-            # effect (it fails+retries+skips the whole file,
-            # DataTransformationService.java:124-126; we drop only the bad
-            # LINE). DROPMALFORMED does this scan-side; it also avoids
-            # Spark's restriction on queries that reference only the
-            # corrupt-record column.
-            mode = "DROPMALFORMED"
-        else:
-            schema = StructType(
-                list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())]
-            )
     return (
-        spark.read.schema(schema)
-        .option("mode", mode)
+        spark.read.schema(MOVIE_INPUT)
+        .option("mode", "DROPMALFORMED")
         .option("pathGlobFilter", glob)
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
 
@@ -90,22 +85,12 @@ def read_movies_jsonl_skip_bad_files(
     list is bounded by the file count and broadcasts; the anti-join is
     map-side.
     """
-    from pyspark.sql import functions as F
-
-    schema = StructType(list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())])
     lines = (
         spark.read.option("pathGlobFilter", glob)
         .text(path)
         .select(F.input_file_name().alias("_file"), "value")
     )
-    parsed = lines.select(
-        "_file",
-        F.from_json(
-            "value",
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("r"),
-    )
+    parsed = lines.select("_file", _parse_line("value").alias("r"))
     # A line like a literal `null` (or anything from_json maps to a NULL
     # struct WITHOUT setting the corrupt column) is also a decode failure
     # under the reference's whole-file-fails semantics — without the
@@ -127,17 +112,8 @@ def corrupt_records(spark: SparkSession, path: str, glob: str = "*.json") -> Dat
     # corrupt-record column, so take the expression route instead: read raw
     # lines with the text source and parse each with from_json carrying a
     # corrupt-record field — malformed lines surface there.
-    from pyspark.sql import functions as F
-
-    schema = StructType(list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())])
     lines = spark.read.option("pathGlobFilter", glob).text(path)
-    parsed = lines.select(
-        F.from_json(
-            "value",
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("r")
-    )
+    parsed = lines.select(_parse_line("value").alias("r"))
     return parsed.filter(F.col(f"r.{CORRUPT_COL}").isNotNull()).select(
         F.col(f"r.{CORRUPT_COL}").alias("raw_line")
     )

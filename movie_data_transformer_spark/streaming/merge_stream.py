@@ -23,10 +23,17 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.merge import FLAT_COLS, merge_flat
-from movie_data_transformer_spark.operators.movie_pipeline import explode_watched
+from movie_data_transformer_spark.operators.movie_pipeline import (
+    dedup_latest,
+    explode_watched,
+    group_watched,
+    kv_serialize,
+)
 from movie_data_transformer_spark.schemas import MOVIE_INPUT
+from movie_data_transformer_spark.sinks.kv import write_kv
 
 
 class ParquetStateStore:
@@ -104,21 +111,9 @@ def run_incremental_merge(
     def _merge_batch(batch_movies: DataFrame, batch_id: int) -> None:
         batch_flat = explode_watched(batch_movies)
         state = store.read()
-        merged = batch_flat if state is None else merge_flat(state, batch_flat)
-        if state is None:
-            from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest
-
-            merged = dedup_latest(merged)
+        merged = dedup_latest(batch_flat) if state is None else merge_flat(state, batch_flat)
         store.commit(merged.select(FLAT_COLS))
         if kv_client_factory is not None:
-            from pyspark.sql import functions as F
-
-            from movie_data_transformer_spark.operators.movie_pipeline import (
-                group_watched,
-                kv_serialize,
-            )
-            from movie_data_transformer_spark.sinks.kv import write_kv
-
             touched = batch_flat.select("customerId").distinct()
             changed = store.read().join(F.broadcast(touched), "customerId", "left_semi")
             write_kv(kv_serialize(group_watched(changed)), kv_client_factory)

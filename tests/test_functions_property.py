@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.functions.core import deterministic_avg, micro_ratio
 from movie_data_transformer_spark.operators.text import (
+    HASHED_LOGIT_SPARK_SQL,
+    PORTABLE_HASH_SPARK_SQL,
     PORTABLE_HASH_SQL,
     portable_hash,
 )
@@ -111,17 +113,33 @@ texts = st.lists(
 @settings(max_examples=8, deadline=None)
 @given(texts)
 def test_portable_hash_matches_duckdb_twin(spark, strings):
+    """portable_hash, its Spark SQL spelling, and the hashed-linear logit
+    all agree with their DuckDB twins. The logit runs over a plain
+    single-space split, which both engines compute identically; the
+    whitespace tokenizers differ on non-ASCII space (DuckDB's trim strips
+    U+00A0, Spark's does not)."""
     rows = [(i, t) for i, t in enumerate(strings)]
     df = spark.createDataFrame(rows, "id long, s string")
     got = {
-        r.id: r.h for r in df.select("id", portable_hash(F.col("s")).alias("h")).collect()
+        (r.id, r.h, r.h_sql, r.logit)
+        for r in df.select(
+            "id",
+            portable_hash(F.col("s")).alias("h"),
+            F.expr(PORTABLE_HASH_SPARK_SQL.format(x="s")).alias("h_sql"),
+            F.expr(HASHED_LOGIT_SPARK_SQL.format(t="split(s, ' ')")).alias("logit"),
+        ).collect()
     }
     con = duckdb.connect()
     con.register("t", pd.DataFrame(rows, columns=["id", "s"]))
+    duck_hash = PORTABLE_HASH_SQL.format(x="s")
+    duck_logit = (
+        "CAST(list_sum(list_transform(string_split(s, ' '),"
+        f" x -> ({PORTABLE_HASH_SQL.format(x='x')} % 2001) - 1000)) AS BIGINT)"
+    )
     want = {
-        int(i): int(h)
-        for i, h in con.sql(
-            f"SELECT id, {PORTABLE_HASH_SQL.format(x='s')} AS h FROM t"
+        (int(i), int(h), int(h), int(lg))
+        for i, h, lg in con.sql(
+            f"SELECT id, {duck_hash} AS h, {duck_logit} AS lg FROM t"
         ).fetchall()
     }
     assert got == want

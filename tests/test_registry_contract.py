@@ -78,6 +78,10 @@ def test_plan_shapes_hold(spark, sf_dir):
     import __spark_entry__ as e
 
     qs = e.queries()
+    # pin each entry's own plan: a frame an earlier test left persisted
+    # (ordered_stats persists its input) would otherwise turn a pinned
+    # subplan into an InMemoryTableScan
+    spark.catalog.clearCache()
 
     def plan_of(name):
         return qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
@@ -109,13 +113,28 @@ def test_plan_shapes_hold(spark, sf_dir):
     assert "CartesianProduct" not in p
     assert p.count("SortMergeJoin") == 0
 
-    # r7 single-exchange operators: skyline (sort + windows, NO join),
-    # FIFO matching (the window and the agg REUSE the user_id
-    # partitioning — one exchange total), CDC apply (one sort-free
-    # max_by fold), hash sampling (map-side predicate + one report agg).
-    # A second Exchange creeping in means the partitioning reuse broke.
+    # skyline: the per-cents aggregate feeds the ordered_stats running
+    # max, which broadcasts back onto the order rows; the same-cents
+    # window rides the one order-row shuffle. At this scale ordered_stats
+    # takes its small path, and its one SinglePartition exchange sits on
+    # the aggregated per-cents table — never on order rows.
+    p = plan_of("orders_skyline")
+    assert p.count("Exchange") == 4, "orders_skyline"
+    assert p.count("Exchange hashpartitioning") == 2, "orders_skyline"
+    assert p.count("BroadcastExchange") == 1, "orders_skyline"
+    assert p.count("Exchange SinglePartition") == 1, "orders_skyline"
+    assert p.count("BroadcastHashJoin") == 1, "orders_skyline"
+    below_single = p.split("Exchange SinglePartition", 1)[1].splitlines()[1]
+    assert "HashAggregate(keys=[cents" in below_single, "orders_skyline"
+    for bad in ("SortMergeJoin", "CartesianProduct"):
+        assert bad not in p, ("orders_skyline", bad)
+
+    # r7 single-exchange operators: FIFO matching (the window and the agg
+    # REUSE the user_id partitioning — one exchange total), CDC apply
+    # (one sort-free max_by fold), hash sampling (map-side predicate +
+    # one report agg). A second Exchange creeping in means the
+    # partitioning reuse broke.
     for name in (
-        "orders_skyline",
         "events_fifo_match",
         "cdc_apply_tombstones",
         "sample_hash_threshold_report",
@@ -214,13 +233,15 @@ def test_plan_shapes_hold(spark, sf_dir):
     assert p.count("Exchange") == 1, "stats_equidepth_histogram"
     assert "Join" not in p, "stats_equidepth_histogram"
 
-    # TTL throttle: one user shuffle into ONE Arrow-grouped stateful
-    # pass — the declared pandas surface, never a scalar row-at-a-time
-    # eval, and no join (state lives in the group iterator)
+    # TTL throttle: one (user, event_type) shuffle into ONE JVM fold —
+    # collect_list (partial + final ObjectHashAggregate) then aggregate()
+    # over the sorted events. No Python evaluation node and no join
+    # (state lives in the fold's accumulator).
     p = plan_of("events_throttle_ttl")
     assert p.count("Exchange hashpartitioning") == 1, "events_throttle_ttl"
-    assert p.count("FlatMapGroupsInPandas") == 1, "events_throttle_ttl"
-    assert "Join" not in p, "events_throttle_ttl"
+    assert p.count("ObjectHashAggregate") == 2, "events_throttle_ttl"
+    for bad in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", "Join"):
+        assert bad not in p, ("events_throttle_ttl", bad)
 
     # Fellegi-Sunter linkage + Kendall concordance: every join
     # broadcasts (m/u weight tables are parameter-sized; the concordance
@@ -244,6 +265,35 @@ def test_plan_shapes_hold(spark, sf_dir):
     p = plan_of("movies_item_item_topk")
     assert "WindowGroupLimit" in p, "movies_item_item_topk"
     assert "CartesianProduct" not in p, "movies_item_item_topk"
+
+
+def test_text_feature_vocabulary_has_one_spark_home():
+    """The Spark spellings of the md5 feature hash and of the
+    hashed-linear logit live only in operators/text.py; every other
+    module formats PORTABLE_HASH_SPARK_SQL / HASHED_LOGIT_SPARK_SQL or
+    calls portable_hash. `conv` is Spark-only, so the DuckDB oracle
+    twins never match the hash check; the logit's DuckDB twins are told
+    apart by their '0x' hash."""
+    import pathlib
+    import re
+
+    import movie_data_transformer_spark
+
+    root = pathlib.Path(movie_data_transformer_spark.__file__).parent
+    home = root / "operators" / "text.py"
+    hashes = ("conv(substr(md5", "conv(substring(md5", "F.conv(F.substring(F.md5")
+    logit = "%2001)-1000"
+    duck_logit = "CAST('0x'||substr(md5(x),1,8)ASBIGINT)" + logit
+    # the patterns must match the one home, or the check below is vacuous
+    assert hashes[0] in re.sub(r"\s+", "", home.read_text())
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == home:
+            continue
+        src = re.sub(r"\s+", "", path.read_text())
+        if any(h in src for h in hashes) or src.count(logit) != src.count(duck_logit):
+            offenders.append(str(path.relative_to(root)))
+    assert offenders == []
 
 
 def test_all_queries_have_lowercase_unique_columns(spark, sf_dir):

@@ -3,7 +3,10 @@
 set -e
 cd "$(dirname "$0")/.."
 echo "== pytest =="
-python -m pytest tests/ -q
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+    timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+echo "== perfbench pytest =="
+python3 -m pytest perfbench/tests -q
 echo "== oracle sf0.01 (driver gate) =="
 python tools/check_oracle.py /root/testdata/sf0.01
 echo "== oracle sf0.1 (scale) =="
